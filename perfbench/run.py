@@ -89,7 +89,6 @@ def main() -> int:
             "TMPDIR": tmp,
             "SPARK_LOCAL_DIRS": os.path.join(work, "local"),
             "JAVA_TOOL_OPTIONS": f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}",
-            "SPARK_GRAFT_DRIVER_MEM": "4g",
         }
     )
     env.pop("OMP_NUM_THREADS", None)

@@ -76,29 +76,23 @@ MIX_TABLES = (
 #: The analytics tables are fixed; ``--seed`` orders the queries.
 TABLE_SEED = 7
 
-#: Input sizes and warm-up counts (ingest+export ops; KG rounds).
+#: Input sizes: dump lines of the two ingest workloads, and the scale
+#: of the analytics tables.
 SIZES = {
-    "full": {
-        "ingest_lines": 20000,
-        "kg_lines": 10000,
-        "scale": 1.0,
-        "ingest_warmups": 1,
-        "kg_warmup_rounds": 1,
-    },
-    "tiny": {
-        "ingest_lines": 300,
-        "kg_lines": 300,
-        "scale": 0.05,
-        "ingest_warmups": 1,
-        "kg_warmup_rounds": 1,
-    },
+    "full": {"ingest_lines": 20000, "kg_lines": 10000, "scale": 1.0},
+    "tiny": {"ingest_lines": 300, "kg_lines": 300, "scale": 0.05},
 }
-#: One round of the KG mix: 9 point lookups, 1 traversal, 1 scan.
-KG_ROUND = ("lookup_src", "lookup_dst", "lookup_vertex") * 3 + ("traverse", "scan")
+#: One round of the KG mix: 18 point lookups (6 of each shape), 2
+#: traversals, 3 scans. The counts give each op type an equal share of
+#: the round's time. Warm p50s on 4 cores, median of ten runs, were
+#: 89 ms (lookup), 873 ms (traverse) and 557 ms (scan), so a round
+#: spends about 1.6 s, 1.7 s and 1.7 s on the three types.
+KG_ROUND = ("lookup_src", "lookup_dst", "lookup_vertex") * 6 + ("traverse",) * 2 + ("scan",) * 3
 
 #: Least work of an untraced run beyond ``--seconds``, so every run
-#: gets enough KG rounds and query passes for a median.
-KG_MIN_ROUNDS = 4
+#: gets enough ingest ops, KG rounds and query passes for a median.
+INGEST_MIN_OPS = 2
+KG_MIN_ROUNDS = 2
 MIX_MIN_PASSES = 2
 #: Fixed work of a traced run, so its counts repeat exactly.
 TRACE_OPS = {"ingest_export": 2, "kg_query": 2 * len(KG_ROUND), "analytics_mix": len(MIX)}
@@ -179,6 +173,15 @@ def layer_unit(name: str) -> str:
 
 def median_ms(xs: list[float]) -> float:
     return statistics.median(xs) * 1000.0 if xs else 0.0
+
+
+def p50_by_kind(kinds: list[str], lat: list[float]) -> dict[str, float]:
+    """Median latency in ms of each kind of op; ``kinds[i]`` is the
+    kind of the op that took ``lat[i]`` seconds."""
+    by_kind: dict[str, list[float]] = {}
+    for kind, dt in zip(kinds, lat):
+        by_kind.setdefault(kind, []).append(dt)
+    return {kind: median_ms(xs) for kind, xs in by_kind.items()}
 
 
 class Tally:
@@ -279,11 +282,12 @@ class Run:
     def setup_done(self) -> float:
         return time.perf_counter() - T0 - self.check_s
 
-    def loop(self, op, after=None, whole=lambda: True) -> list[float]:
+    def loop(self, op, after=None, whole=lambda: True, min_ops=1) -> list[float]:
         """The measured closed loop: time ``op(i)`` until ``--seconds``
-        have passed and ``whole()`` holds (a traced run does a fixed
-        number of ops instead); ``after(i, result)`` runs once the op's
-        clock has stopped. An op that raises is counted failed."""
+        have passed, at least ``min_ops`` ops ran and ``whole()`` holds
+        (a traced run does a fixed number of ops instead);
+        ``after(i, result)`` runs once the op's clock has stopped. An op
+        that raises is counted failed."""
         lat: list[float] = []
         end = time.perf_counter() + self.args.seconds
         n_trace = TRACE_OPS[self.args.workload]
@@ -301,7 +305,9 @@ class Run:
             if after is not None and result is not None:
                 after(i, result)
             if whole() and (
-                len(lat) >= n_trace if self.trace else time.perf_counter() >= end
+                len(lat) >= n_trace
+                if self.trace
+                else len(lat) >= min_ops and time.perf_counter() >= end
             ):
                 self.loop_labels = {w[0] for w in self.windows[first_window:]}
                 return lat
@@ -480,8 +486,7 @@ def ingest_export(run: Run) -> dict:
         return out, db
 
     run.measuring = False
-    for w in range(run.size["ingest_warmups"]):
-        op(-1 - w)
+    op(-1)  # warm-up
     setup_s = run.setup_done()
     run.measuring = True
 
@@ -491,23 +496,26 @@ def ingest_export(run: Run) -> dict:
         db_bytes.append(os.path.getsize(result[1]))
         check_export(run.tally, result[1], expected, f"op {i}")
 
-    lat = run.loop(op, after)
+    lat = run.loop(op, after, min_ops=INGEST_MIN_OPS)
     if run.trace:
         trace_ingest(run, dump, run.path("kg0"), run.path("kg0.duckdb"))
     run.detail.update(
         {
             "lines": n,
             "dump_bytes": dump_bytes,
-            "ingest_lines_per_s": n / statistics.median(lat),
+            "ingest_lines_per_s": n * len(lat) / sum(lat),
             "ingest_p50_ms": run.ms("ingest.ingest"),
             "export_p50_ms": run.ms("duckdb_io.export"),
             "db_bytes_ratio": statistics.median(db_bytes) / dump_bytes if db_bytes else 0,
             "ops": len(lat),
         }
     )
+    # One client, so lines completed per second of measured op time is
+    # the reciprocal of the mean op time: near-reciprocal to the
+    # median, as every op does the same work.
     e2e = {
         "setup_s": setup_s,
-        "throughput_per_s": n / statistics.median(lat),
+        "throughput_per_s": n * len(lat) / sum(lat),
         "op_p50_ms": median_ms(lat),
     }
     return run.finish(e2e, lat)
@@ -570,7 +578,7 @@ def kg_query(run: Run) -> dict:
             return df.collect()
 
     run.measuring = False
-    for _ in range(run.size["kg_warmup_rounds"] * len(KG_ROUND)):
+    for _ in KG_ROUND:  # warm-up: one round
         shape, k = next(ops)
         result = op(shape, k)
         if shape == "traverse":
@@ -618,21 +626,20 @@ def kg_query(run: Run) -> dict:
     finally:
         con.close()
 
-    by_shape: dict[str, list[float]] = {}
-    for (shape, _k), dt in zip(issued, lat):
-        by_shape.setdefault(shape.split("_")[0], []).append(dt)
-    lookups = sorted(by_shape.get("lookup", []))
+    kinds = [shape.split("_")[0] for shape, _k in issued]
+    p50 = p50_by_kind(kinds, lat)
+    lookups = [dt for kind, dt in zip(kinds, lat) if kind == "lookup"]
     run.detail.update(
         {
             "lines": n,
             "ops": len(lat),
             "kg_ops_per_s": len(lat) / sum(lat),
-            "lookup_p50_ms": median_ms(lookups),
+            "lookup_p50_ms": p50["lookup"],
             "lookup_p90_ms": statistics.quantiles(lookups, n=10)[-1] * 1000.0
             if len(lookups) > 1
             else median_ms(lookups),
-            "traverse_p50_ms": median_ms(by_shape.get("traverse", [])),
-            "scan_p50_ms": median_ms(by_shape.get("scan", [])),
+            "traverse_p50_ms": p50["traverse"],
+            "scan_p50_ms": p50["scan"],
             "split_confs_before_ingest": confs_before,
             "split_confs_after_ingest": confs_after,
             "checked_shapes": sorted(first),
@@ -645,10 +652,13 @@ def kg_query(run: Run) -> dict:
         run.layer["views.lookup_run_ms"] = run.ms("views.lookup.run")
         run.layer["views.scan_ms"] = run.ms("views.scan.build") + run.ms("views.scan.run")
         run.layer["graph.k_hop_ms"] = run.ms("graph.k_hop")
+    # op_p50_ms weighs the three op types the same: the geometric mean
+    # of their p50s. Lookups are most of the ops, so the p50 over all
+    # ops would be the lookup p50 alone.
     e2e = {
         "setup_s": setup_s,
         "throughput_per_s": len(lat) / sum(lat),
-        "op_p50_ms": median_ms(lat),
+        "op_p50_ms": statistics.geometric_mean(p50.values()),
     }
     return run.finish(e2e, lat)
 
@@ -735,6 +745,7 @@ def analytics_mix(run: Run) -> dict:
 
     passes: list[float] = []
     pending: list[tuple[str, str]] = []
+    issued: list[str] = []
 
     def op(i: int) -> None:
         if not pending:
@@ -742,6 +753,7 @@ def analytics_mix(run: Run) -> dict:
             pending.extend(order)
             passes.append(0.0)
         _m, q = pending.pop(0)
+        issued.append(q)
         t0 = time.perf_counter()
         try:
             with run.span(f"{q}.build"):
@@ -773,10 +785,12 @@ def analytics_mix(run: Run) -> dict:
             },
         }
     )
+    # As on kg_query, every query weighs the same in op_p50_ms: the
+    # p50 over all ops would be whichever query sorts into the middle.
     e2e = {
         "setup_s": setup_s,
         "throughput_per_s": len(MIX) / statistics.median(passes),
-        "op_p50_ms": median_ms(lat),
+        "op_p50_ms": statistics.geometric_mean(p50_by_kind(issued, lat).values()),
     }
     return run.finish(e2e, lat)
 
